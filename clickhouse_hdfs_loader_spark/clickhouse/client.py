@@ -4,7 +4,8 @@ Reference parity:
 - D5 connection cache — singleton client map keyed by
   ``user:pass@host:port/db`` (ClickhouseClientHolder.java:17-69). Here a
   module-level cache; on executors that means one client per (key,
-  python-worker) — the Spark analogue of the reference's per-JVM cache.
+  python-worker) — the Spark analogue of the reference's per-JVM cache —
+  and each client keeps one HTTP/1.1 connection per thread open.
 - W5 retry tiers — direct insert ``(2^n)·100s``
   (AbstractClickhouseLoaderMapper.java:344), staged insert ``(n+1)·10s``
   (:403), promote ``(n+1)·30s`` (ClickhouseLoaderReducer.java:175), DDL
@@ -14,16 +15,18 @@ Reference parity:
 - alive probe — HTTP 200 on ``/`` (AbstractClickhouseLoaderMapper.java:
   678-699).
 
-Plain stdlib urllib: no JDBC jar dependency, and the HTTP interface is
-what the reference's insert path ultimately talks to.
+Plain stdlib ``http.client``: no JDBC jar dependency, and the HTTP
+interface is what the reference's insert path ultimately talks to.
 """
 
 from __future__ import annotations
 
+import http.client
+import socket
+import threading
 import time
-import urllib.error
 import urllib.parse
-import urllib.request
+from dataclasses import dataclass, field
 
 
 class ClickHouseError(RuntimeError):
@@ -53,57 +56,69 @@ def with_retries(fn, tier: str = "ddl", max_tries: int = 3,
     raise ClickHouseError(f"failed after {max_tries} tries: {last}") from last
 
 
+@dataclass(eq=False)
 class ClickHouseClient:
-    def __init__(self, host: str, http_port: int = 8123, user: str = "default",
-                 password: str = "", database: str = "default",
-                 timeout: float = 60.0):
-        self.host = host
-        self.http_port = http_port
-        self.user = user
-        self.password = password
-        self.database = database
-        self.timeout = timeout
+    host: str
+    http_port: int = 8123
+    user: str = "default"
+    password: str = ""
+    database: str = "default"
+    timeout: float = 60.0
+    _local: threading.local = field(default_factory=threading.local,
+                                    init=False, repr=False)  # .conn
 
-    @property
-    def key(self) -> str:
-        """Cache key — same shape as ClickhouseClientHolder.java:33."""
-        return f"{self.user}:{self.password}@{self.host}:{self.http_port}/{self.database}"
-
-    def _url(self, params: dict[str, str] | None = None) -> str:
-        q = {"user": self.user, "database": self.database}
-        if self.password:
-            q["password"] = self.password
-        q.update(params or {})
-        return f"http://{self.host}:{self.http_port}/?" + urllib.parse.urlencode(q)
+    def _request(self, method: str, path: str, body: bytes | None,
+                 timeout: float) -> tuple[int, bytes]:
+        """One request on this thread's kept connection; a kept socket the
+        peer closed while idle is reopened once, before any retry ladder."""
+        if not hasattr(self._local, "conn"):
+            self._local.conn = http.client.HTTPConnection(self.host,
+                                                          self.http_port)
+        conn = self._local.conn
+        while True:
+            kept, resp = conn.sock is not None, None
+            conn.timeout = timeout  # for a (re)connect inside request()
+            try:
+                if kept:
+                    conn.sock.settimeout(timeout)
+                conn.request(method, path, body=body)
+                # ACK at once: a server sending headers and body apart
+                # without TCP_NODELAY holds the body until the ACK
+                if hasattr(socket, "TCP_QUICKACK"):
+                    conn.sock.setsockopt(socket.IPPROTO_TCP,
+                                         socket.TCP_QUICKACK, 1)
+                resp = conn.getresponse()
+                return resp.status, resp.read()
+            except BaseException as exc:
+                conn.close()
+                if not (kept and resp is None
+                        and isinstance(exc, ConnectionError)):
+                    raise
 
     def ping(self) -> bool:
         """Replica-alive probe: GET / must return HTTP 200 ('Ok.')
         (AbstractClickhouseLoaderMapper.java:678-699)."""
         try:
-            with urllib.request.urlopen(
-                    f"http://{self.host}:{self.http_port}/", timeout=5) as r:
-                return r.status == 200
-        except (urllib.error.URLError, OSError):
+            return self._request("GET", "/", None, 5.0)[0] == 200
+        except (http.client.HTTPException, OSError):
             return False
 
-    def execute(self, sql: str) -> str:
+    def execute(self, sql: str | bytes) -> str:
         """POST a statement; returns the raw response body (TabSeparated)."""
-        req = urllib.request.Request(self._url(), data=sql.encode("utf-8"),
-                                     method="POST")
+        body = sql.encode("utf-8") if isinstance(sql, str) else sql
+        q = {"user": self.user, "database": self.database}
+        if self.password:
+            q["password"] = self.password
         try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as r:
-                return r.read().decode("utf-8")
-        except urllib.error.HTTPError as e:
-            raise ClickHouseError(
-                f"{self.host}:{self.http_port} HTTP {e.code}: "
-                f"{e.read().decode('utf-8', 'replace')[:500]}") from e
-        except (urllib.error.URLError, OSError) as e:
+            status, reply = self._request(
+                "POST", "/?" + urllib.parse.urlencode(q), body, self.timeout)
+        except (http.client.HTTPException, OSError) as e:
             raise ClickHouseError(f"{self.host}:{self.http_port}: {e}") from e
-
-    def insert_payload(self, sql_header: str, payload: str) -> None:
-        """``INSERT INTO … FORMAT X`` header + newline-joined rows — the
-        batch shape of AbstractClickhouseLoaderMapper.java:288-298."""
-        self.execute(sql_header + "\n" + payload)
+        text = reply.decode("utf-8", "replace")
+        if status >= 300:
+            raise ClickHouseError(
+                f"{self.host}:{self.http_port} HTTP {status}: {text[:500]}")
+        return text
 
     def query_rows(self, sql: str) -> list[list[str]]:
         body = self.execute(sql)
@@ -123,5 +138,30 @@ def get_client(host: str, http_port: int = 8123, user: str = "default",
     if ":" in host:
         host, port_s = host.rsplit(":", 1)
         http_port = int(port_s)
-    c = ClickHouseClient(host, http_port, user, password, database)
-    return _CACHE.setdefault(c.key, c)
+    # cache key: same shape as ClickhouseClientHolder.java:33
+    key = f"{user}:{password}@{host}:{http_port}/{database}"
+    return _CACHE.get(key) or _CACHE.setdefault(
+        key, ClickHouseClient(host, http_port, user, password, database))
+
+
+@dataclass(frozen=True)
+class ClientSettings:
+    """Connection and retry settings shared by every host of one job."""
+    http_port: int = 8123
+    user: str = "default"
+    password: str = ""
+    database: str = "default"
+    max_tries: int = 3
+    backoff_scale: float = 1.0
+
+    def client(self, host: str) -> ClickHouseClient:
+        return get_client(host, self.http_port, self.user, self.password,
+                          self.database)
+
+    def retry(self, fn, tier: str = "ddl"):
+        return with_retries(fn, tier, self.max_tries, self.backoff_scale)
+
+    def run(self, host: str, sql: str | bytes, tier: str = "ddl") -> str:
+        """``sql`` on ``host`` under the ``tier`` retry ladder."""
+        cli = self.client(host)
+        return self.retry(lambda: cli.execute(sql), tier)

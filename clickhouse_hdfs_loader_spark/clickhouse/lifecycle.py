@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 
 from ..operators.sharding import ClusterTopology
-from .client import ClickHouseClient, get_client, with_retries
+from .client import ClientSettings
 
 # `= Distributed(cluster, db, table[, sharding_expr])` — the resolution
 # regex of ClickhouseHdfsLoader.java:49
@@ -82,21 +82,16 @@ class LifecycleManager:
                  max_tries: int = 3, backoff_scale: float = 1.0,
                  user: str = "default", password: str = ""):
         self.topology = topology
-        self.http_port = http_port
-        self.max_tries = max_tries
-        self.backoff_scale = backoff_scale
-        self.user = user
-        self.password = password
+        self.conn = ClientSettings(http_port, user, password,
+                                   max_tries=max_tries,
+                                   backoff_scale=backoff_scale)
 
     def _hosts(self) -> list[str]:
         return [h for n in self.topology.nodes for h in n.hosts]
 
     def _exec_all(self, sql: str) -> None:
         for h in self._hosts():
-            cli = get_client(h, self.http_port, user=self.user, password=self.password)
-            with_retries(lambda c=cli: c.execute(sql), tier="ddl",
-                         max_tries=self.max_tries,
-                         backoff_scale=self.backoff_scale)
+            self.conn.run(h, sql)
 
     # -- D2 ------------------------------------------------------------
     def create_daily_tables(self, create_ddl: str, database: str, table: str,
@@ -136,25 +131,17 @@ class LifecycleManager:
         cmp = "<" if distributed_database is not None else "<="
         expired: set[str] = set()
         for h in self._hosts():
-            cli = get_client(h, self.http_port, user=self.user, password=self.password)
-            rows = cli.query_rows(
+            rows = self.conn.client(h).query_rows(
                 f"SELECT name FROM system.tables WHERE database = '{database}' "
                 f"AND match(name, '{pattern}') AND name {cmp} '{bound}'")
             for (name,) in [r[:1] for r in rows]:
                 if process == "merge":
-                    with_retries(lambda c=cli, n=name: c.execute(
-                        f"INSERT INTO {database}.{table} SELECT * FROM {database}.{n}"),
-                        tier="promote", max_tries=self.max_tries,
-                        backoff_scale=self.backoff_scale)
-                with_retries(lambda c=cli, n=name: c.execute(
-                    f"DROP TABLE IF EXISTS {database}.{n}"),
-                    tier="ddl", max_tries=self.max_tries,
-                    backoff_scale=self.backoff_scale)
+                    self.conn.run(h, f"INSERT INTO {database}.{table} "
+                                  f"SELECT * FROM {database}.{name}", "promote")
+                self.conn.run(h, f"DROP TABLE IF EXISTS {database}.{name}")
                 if distributed_database is not None:
-                    with_retries(lambda c=cli, n=name: c.execute(
-                        f"DROP TABLE IF EXISTS {distributed_database}.{n}"),
-                        tier="ddl", max_tries=self.max_tries,
-                        backoff_scale=self.backoff_scale)
+                    self.conn.run(h, "DROP TABLE IF EXISTS "
+                                  f"{distributed_database}.{name}")
                 expired.add(name)
         return sorted(expired)
 
@@ -190,12 +177,8 @@ class LifecycleManager:
                              "(reference requires *MergeTree)")
         sql = f"ALTER TABLE {database}.{table} DROP PARTITION {partition}"
         for node in self.topology.nodes:
-            hosts = node.hosts[:1] if replicated else node.hosts
-            for h in hosts:
-                cli = get_client(h, self.http_port, user=self.user, password=self.password)
-                with_retries(lambda c=cli: c.execute(sql), tier="ddl",
-                             max_tries=self.max_tries,
-                             backoff_scale=self.backoff_scale)
+            for h in node.hosts[:1] if replicated else node.hosts:
+                self.conn.run(h, sql)
 
     def list_partitions(self, database: str, table: str) -> dict[int, list[str]]:
         """Per-shard partition inventory — the discovery step the
@@ -216,12 +199,9 @@ class LifecycleManager:
         for node in self.topology.nodes:
             last_err: Exception | None = None
             for h in node.hosts:
-                cli = get_client(h, self.http_port, user=self.user,
-                                 password=self.password)
                 try:
-                    rows = with_retries(lambda c=cli: c.query_rows(sql),
-                                        tier="ddl", max_tries=self.max_tries,
-                                        backoff_scale=self.backoff_scale)
+                    rows = self.conn.retry(
+                        lambda: self.conn.client(h).query_rows(sql))
                 except Exception as e:  # noqa: BLE001 — try next replica
                     last_err = e
                     continue
@@ -239,7 +219,7 @@ class LifecycleManager:
         GC query of ClickhouseHdfsLoader.java:496-524 (which selects
         ``concat(database,'.',name)`` with a LIKE filter)."""
         for h in self._hosts():
-            cli = get_client(h, self.http_port, user=self.user, password=self.password)
+            cli = self.conn.client(h)
             try:
                 rows = cli.query_rows(
                     f"SELECT concat(database, '.', name) AS tablename "

@@ -2,11 +2,11 @@
 
 Protocol (SURVEY §3.2-3.3):
 1. per-task temp table ``temp.<table>_<dtYYYYMMDD>_<epoch>_p<NNNNNN>_A``
-   created on every shard host with the target's DDL rewritten to
+   on the picked replica of each shard, the target DDL rewritten to
    ``ENGINE = StripeLog`` (ClickhouseHdfsLoader.java:114-118 prefix;
-   AbstractClickhouseLoaderMapper.java:568-591 rewrite, :631-651
-   create-with-retry);
-2. executors batch-insert into their temp table;
+   AbstractClickhouseLoaderMapper.java:568-591, :631-651);
+2. executors batch-insert into their temp table (writer.py's Arrow
+   writer, :class:`StagedTemp` policy) and return ``(host, temp)`` rows;
 3. after the Spark action completes, the DRIVER promotes each
    (host, temp) with ``INSERT INTO target SELECT * FROM temp.x``
    (ClickhouseLoaderReducer.java:218-260) — no reducer stage needed,
@@ -18,11 +18,10 @@ Protocol (SURVEY §3.2-3.3):
    CleanupTempTableOutputCommitter.java:62-87 / ClickhouseHdfsLoader.java:
    496-524 GC, here a ``try/finally`` around the action.
 
-Exactly-once posture: temp-table names are attempt-scoped
-(partitionId + attemptNumber), so a retried task writes a fresh table and
-an aborted attempt's table is simply never promoted — duplicate promotion
-is impossible without distributed coordination, which is the same
-guarantee level the reference achieves by disabling speculation.
+Exactly-once posture: temp-table names are attempt-scoped (partitionId +
+attemptNumber), so a retried task writes a fresh table and an aborted
+attempt's table is never promoted — the guarantee level the reference
+reaches by disabling speculation, without distributed coordination.
 """
 
 from __future__ import annotations
@@ -34,8 +33,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from ..config import LoaderConfig
-from ..operators.sharding import ClusterTopology, repartition_by_shard
-from .client import ClickHouseClient, get_client, with_retries
+from ..operators.sharding import ClusterTopology
+from .client import ClientSettings
+from .writer import Replicas, insert_header, write_partitions
 
 TEMP_DATABASE = "temp"
 
@@ -70,127 +70,78 @@ class StagedLoadPlan:
     temp_tables: list[tuple[str, str]] = field(default_factory=list)  # (host, temp)
 
 
+class StagedTemp:
+    """W3 delivery into the task's temp table on the picked replica (a
+    down first replica falls through, getANodeAddress :318-326), created
+    on first use. Failures raise; the retried attempt writes fresh tables."""
+    schema = "host string, temp string"
+
+    def __init__(self, prefix: str, fmt: str, create_ddl: str):
+        self.prefix, self.fmt, self.create_ddl = prefix, fmt, create_ddl
+
+    def start(self) -> None:
+        from pyspark import TaskContext
+        ctx = TaskContext.get()
+        self.name = temp_table_name(self.prefix, ctx.partitionId(),
+                                    ctx.attemptNumber())
+        self.header = insert_header(TEMP_DATABASE, self.name, self.fmt)
+        self.ddl = rewrite_ddl_to_striplog(self.create_ddl, TEMP_DATABASE,
+                                           self.name)
+        self.created: set[str] = set()
+        self.loaded: set[str] = set()
+
+    def deliver(self, replicas: Replicas, shard: int, body: bytes,
+                rows: int) -> None:
+        def ensure(host: str) -> None:
+            if host not in self.created:
+                replicas.conn.run(
+                    host, f"CREATE DATABASE IF NOT EXISTS {TEMP_DATABASE}")
+                replicas.conn.run(host, self.ddl)
+                self.created.add(host)
+
+        self.loaded.add(replicas.insert_picked(shard, body, "staged", ensure))
+
+    def result(self) -> list[dict]:
+        # mapper output of W3: ("taskId@host", temp_table) pairs
+        return [{"host": h, "temp": f"{TEMP_DATABASE}.{self.name}"}
+                for h in sorted(self.loaded)]
+
+
 def stage_partitions(df: DataFrame, key_col: str, topology: ClusterTopology,
                      config: LoaderConfig, *, create_ddl: str,
                      target_database: str, target_table: str, dt: str,
                      backoff_scale: float = 1.0) -> StagedLoadPlan:
-    """Phase 1+2: create per-partition temp tables and batch-insert into
-    them from ``foreachPartition``. Returns the promote plan."""
-    from pyspark import TaskContext
-    from pyspark.sql import functions as F
-
-    from ..operators.transform import format_header_lines, wire_separator
-
-    prefix = temp_table_prefix(target_table, dt or "00000000")
-    fmt = config.clickhouse_format
-    sep = wire_separator(fmt)
-    batch_size = min(config.batch_size, 1_048_576)
-    hosts_per_shard = [n.hosts for n in topology.nodes]
-    http_port = config.clickhouse_http_port
-    max_tries = config.max_tries
-    user, password = config.username, config.password
-
-    routed = repartition_by_shard(df, key_col, topology,
-                                  config.tasks_per_shard(len(topology.nodes)))
-    data_cols = [c for c in routed.columns if c != "shard"]
-    from ..operators.transform import wire_line_col
-    line = wire_line_col(routed, data_cols, sep)
-    serialized = routed.select("shard", line.alias("line"))
-    hdr_lines = format_header_lines(fmt, routed, data_cols)
-    payload_prefix = "".join(l + "\n" for l in hdr_lines)
-
-    def stage_one(rows):
-        ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.attemptNumber()
-        temp = temp_table_name(prefix, pid, attempt)
-        ddl = rewrite_ddl_to_striplog(create_ddl, TEMP_DATABASE, temp)
-        header = f"INSERT INTO {TEMP_DATABASE}.{temp} FORMAT {fmt}"
-        created: set[str] = set()
-        loaded: set[str] = set()
-
-        def ensure(host: str) -> None:
-            if host not in created:
-                cli = get_client(host, http_port, user=user, password=password)
-                with_retries(lambda: cli.execute(
-                    f"CREATE DATABASE IF NOT EXISTS {TEMP_DATABASE}"),
-                    tier="ddl", max_tries=max_tries, backoff_scale=backoff_scale)
-                with_retries(lambda: cli.execute(ddl), tier="ddl",
-                             max_tries=max_tries, backoff_scale=backoff_scale)
-                created.add(host)
-
-        picked: dict[int, str] = {}
-
-        def pick_host(shard: int) -> str:
-            # stage on the first ALIVE replica, falling back through the
-            # list (the reference picks an available node via
-            # getANodeAddress, AbstractClickhouseLoaderMapper.java:318-326)
-            # — a single down first-replica must not fail the staged load
-            if shard not in picked:
-                hosts = hosts_per_shard[shard]
-                picked[shard] = next(
-                    (h for h in hosts
-                     if get_client(h, http_port, user=user,
-                                   password=password).ping()),
-                    hosts[0])
-            return picked[shard]
-
-        def flush(shard: int, buf: list[str]) -> None:
-            host = pick_host(shard)
-            ensure(host)
-            payload = payload_prefix + "\n".join(buf)
-            cli = get_client(host, http_port, user=user, password=password)
-            with_retries(lambda: cli.insert_payload(header, payload),
-                         tier="staged", max_tries=max_tries,
-                         backoff_scale=backoff_scale)
-            loaded.add(host)
-
-        buffers: dict[int, list[str]] = {}
-        for row in rows:
-            buf = buffers.setdefault(row["shard"], [])
-            buf.append(row["line"])
-            if len(buf) >= batch_size:
-                flush(row["shard"], buf)
-                buffers[row["shard"]] = []
-        for shard, buf in buffers.items():
-            if buf:
-                flush(shard, buf)
-        # mapper output of W3: ("taskId@host", temp_table) pairs
-        return [(h, f"{TEMP_DATABASE}.{temp}") for h in loaded]
-
-    pairs = serialized.rdd.mapPartitions(
-        lambda rows: iter(stage_one(rows))).collect()
-    plan = StagedLoadPlan(target_database, target_table)
-    plan.temp_tables = sorted(set(pairs))
-    return plan
+    """Phase 1+2: every write task creates and fills its temp tables
+    (:class:`StagedTemp`). Returns the promote plan."""
+    policy = StagedTemp(temp_table_prefix(target_table, dt or "00000000"),
+                        config.clickhouse_format, create_ddl)
+    rows = write_partitions(df, key_col, topology, config, policy,
+                            backoff_scale=backoff_scale)
+    return StagedLoadPlan(target_database, target_table,
+                          sorted({(r["host"], r["temp"]) for r in rows}))
 
 
 def promote(plan: StagedLoadPlan, topology: ClusterTopology,
             config: LoaderConfig, *, replicated: bool = False,
-            user: str = "default", password: str = "",
             backoff_scale: float = 1.0) -> None:
     """Phase 3+4: driver-side ``INSERT INTO target SELECT * FROM temp`` per
     (host, temp) pair, replica replay via remote() for non-replicated
     engines, then drop (ClickhouseLoaderReducer.java:218-260)."""
     tgt = f"{plan.target_database}.{plan.target_table}"
-    port = config.clickhouse_http_port
+    user, password = config.username, config.password
+    conn = ClientSettings(config.clickhouse_http_port, user, password,
+                          max_tries=config.max_tries,
+                          backoff_scale=backoff_scale)
     try:
         for host, temp in plan.temp_tables:
-            cli = get_client(host, port, user=user, password=password)
-            with_retries(lambda c=cli, t=temp: c.execute(
-                f"INSERT INTO {tgt} SELECT * FROM {t}"),
-                tier="promote", max_tries=config.max_tries,
-                backoff_scale=backoff_scale)
-            if not replicated:
-                siblings = _replicas_of(host, topology)
-                for sib in siblings:
-                    scli = get_client(sib, port, user=user, password=password)
-                    with_retries(lambda c=scli, h=host, t=temp: c.execute(
-                        f"INSERT INTO {tgt} SELECT * FROM "
-                        f"remote('{h}:9000', {t}, '{user}', '{password}')"),
-                        tier="promote", max_tries=config.max_tries,
-                        backoff_scale=backoff_scale)
+            conn.run(host, f"INSERT INTO {tgt} SELECT * FROM {temp}",
+                     "promote")
+            for sib in () if replicated else _replicas_of(host, topology):
+                conn.run(sib, f"INSERT INTO {tgt} SELECT * FROM "
+                         f"remote('{host}:9000', {temp}, '{user}', "
+                         f"'{password}')", "promote")
     finally:
-        cleanup(plan, topology, config, backoff_scale=backoff_scale)
+        cleanup(plan, topology, config)
 
 
 def _replicas_of(host: str, topology: ClusterTopology) -> tuple[str, ...]:
@@ -201,17 +152,16 @@ def _replicas_of(host: str, topology: ClusterTopology) -> tuple[str, ...]:
 
 
 def cleanup(plan: StagedLoadPlan, topology: ClusterTopology,
-            config: LoaderConfig, backoff_scale: float = 1.0) -> None:
+            config: LoaderConfig) -> None:
     """D1 temp-table GC — drop every staged table on its host(s); errors
     swallowed per host like the reference's best-effort cleaner
     (ClickhouseHdfsLoader.java:496-524)."""
-    port = config.clickhouse_http_port
+    conn = ClientSettings(config.clickhouse_http_port, config.username,
+                          config.password)
     for host, temp in plan.temp_tables:
         for h in (host, *_replicas_of(host, topology)):
             try:
-                get_client(h, port, user=config.username,
-                           password=config.password).execute(
-                    f"DROP TABLE IF EXISTS {temp}")
+                conn.client(h).execute(f"DROP TABLE IF EXISTS {temp}")
             except Exception:  # noqa: BLE001 — best-effort GC
                 pass
 
@@ -227,6 +177,5 @@ def staged_load(df: DataFrame, key_col: str, topology: ClusterTopology,
                             target_table=target_table, dt=dt,
                             backoff_scale=backoff_scale)
     promote(plan, topology, config, replicated=replicated,
-            user=config.username, password=config.password,
             backoff_scale=backoff_scale)
     return plan

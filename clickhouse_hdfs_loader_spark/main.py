@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .clickhouse.client import get_client
 from .clickhouse.lifecycle import LifecycleManager, resolve_distributed
-from .clickhouse.staging import staged_load, temp_table_prefix
+from .clickhouse.staging import staged_load
 from .clickhouse.writer import write_direct
 from .config import LoaderConfig, parse_args
 from .operators.transform import transform_pipeline
@@ -114,7 +114,6 @@ def run_load(config: LoaderConfig, spark: SparkSession,
         key_col = df.columns[0]
 
     # step 5+6 — the one cluster action
-    prefix = temp_table_prefix(target_table, config.dt or "00000000")
     try:
         if config.direct:
             return write_direct(df, key_col, topology, config,

@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ..functions.murmur import guava_shard_code
 from ..functions.murmur_np import guava_shard_codes
 
 

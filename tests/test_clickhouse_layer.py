@@ -586,3 +586,41 @@ def test_expire_daily_task_swallows_failure_and_runs_on_thread(mocks):
     m.canned["system.tables"] = "t_20170101\n"
     assert lm.expire_daily_tables_task(
         "db", "t", "2017-01-07", expires=3, process="drop") == ["t_20170101"]
+
+
+@pytest.mark.parametrize("batch_size", [1, 7, 100, 5000])
+def test_shard_chunks_match_row_loop_reference(batch_size):
+    """The Arrow chunker cuts, per shard, the same chunks in the same row
+    order as the reference's row-at-a-time per-shard buffer
+    (HostRecordsCache.java:6-17): flush at ``batch_size``, carry across
+    Arrow batches, then flush each remainder."""
+    import random
+
+    import pyarrow as pa
+
+    from clickhouse_hdfs_loader_spark.clickhouse.writer import shard_chunks
+
+    rnd = random.Random(batch_size)
+    rows = [(rnd.choice([0, 1, 2, 2, 2]), f"line-{i}") for i in range(1000)]
+    cuts = sorted(rnd.sample(range(1, len(rows)), 6))
+    batches = [pa.RecordBatch.from_pylist(
+        [{"shard": s, "line": l} for s, l in rows[a:b]],
+        schema=pa.schema([("shard", pa.int32()), ("line", pa.string())]))
+        for a, b in zip([0, *cuts], [*cuts, len(rows)])]
+
+    expected: dict[int, list[list[str]]] = {}
+    buffers: dict[int, list[str]] = {}
+    for shard, line in rows:
+        buf = buffers.setdefault(shard, [])
+        buf.append(line)
+        if len(buf) >= batch_size:
+            expected.setdefault(shard, []).append(buf)
+            buffers[shard] = []
+    for shard, buf in buffers.items():
+        if buf:
+            expected.setdefault(shard, []).append(buf)
+
+    got: dict[int, list[list[str]]] = {}
+    for shard, lines in shard_chunks(iter(batches), batch_size):
+        got.setdefault(shard, []).append(lines.to_pylist())
+    assert got == expected
